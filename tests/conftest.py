@@ -12,6 +12,12 @@ from timestream_travel_spark import get_spark
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "fast: quick tier (`pytest tests -m fast`): driver contract and session cache"
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("tests", shuffle_partitions=8)

@@ -1,6 +1,10 @@
 from __future__ import annotations
 
+import pytest
+
 import __spark_entry__ as entrymod
+
+pytestmark = pytest.mark.fast
 
 
 def test_entry_runs_and_has_stable_schema(spark):

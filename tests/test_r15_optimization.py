@@ -10,6 +10,7 @@ and size-gated.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from timestream_travel_spark.tables import load_table, spread
@@ -171,6 +172,7 @@ def test_spread_preserves_rows_and_gates_on_size(spark, sf_dir):
     assert spread(rng) is rng
 
 
+@pytest.mark.fast
 def test_pair_grid_cache_matches_inline_build(spark, sf_dir):
     """The session-cached two-sample pair grid (analytics5._pair_grid)
     is row-identical to the inline merged build it replaced at ten
@@ -202,6 +204,7 @@ def test_pair_grid_cache_matches_inline_build(spark, sf_dir):
     assert _pair_grid(spark, sf_dir) is _pair_grid(spark, sf_dir)
 
 
+@pytest.mark.fast
 def test_retrieval_caches_match_uncached_builds(spark, sf_dir):
     """bm25_scores_cached / ql_scores_cached / relevant_docs_cached
     are row-identical to their uncached builders (the eval family
@@ -256,6 +259,7 @@ def test_rollup_hwm_fast_path_matches_spark_read(spark, sf_dir, tmp_path):
     assert fast == slow and fast is not None
 
 
+@pytest.mark.fast
 def test_daily_and_ohlc_caches_match_uncached_builds(spark, sf_dir):
     """analytics8._daily and timeseries15._daily_ohlc session caches
     are row-identical to fresh inline builds of the same aggregates
@@ -286,6 +290,7 @@ def test_daily_and_ohlc_caches_match_uncached_builds(spark, sf_dir):
     assert _daily_ohlc(spark, sf_dir) is _daily_ohlc(spark, sf_dir)
 
 
+@pytest.mark.fast
 def test_per_dim_stats_cache_matches_inline_build(spark, sf_dir):
     """clusterqual._per_dim_stats (the shared DB/Dunn sufficient-
     statistic table) is row-identical to a fresh inline build."""

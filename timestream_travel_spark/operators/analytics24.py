@@ -52,15 +52,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from timestream_travel_spark.operators.analytics5 import (
-    _CNT_SQL,
-    _PAIRS_SQL,
-    _counts,
-    _pairs,
-    _pair_grid,
-)
+from timestream_travel_spark.cache import shared
+from timestream_travel_spark.operators.analytics5 import _CNT_SQL, _PAIRS_SQL
 from timestream_travel_spark.registry import query
 from timestream_travel_spark.tables import load_table
 
@@ -299,19 +293,15 @@ _GK_CELLS_SQL = """
       FROM orders GROUP BY 1, 2
 """
 
-_CELLS_CACHE: dict = {}
-
-
 def _order_cells(spark: SparkSession, sf_dir: str) -> list[tuple]:
     """Collected (priority, status, count) contingency cells — the
     ≤|priorities|·|statuses| table behind GK lambda and Theil's U,
-    cached per (session, fixture); the distributed reduce over
+    shared per (session, fixture); the distributed reduce over
     orders runs once (r16)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cells = _CELLS_CACHE.get(key)
-    if cells is None:
+
+    def build():
         od = load_table(spark, sf_dir, "orders")
-        cells = [
+        return [
             (r.r, r.cl, r.c)
             for r in od.groupBy(
                 F.col("o_orderpriority").alias("r"),
@@ -320,8 +310,8 @@ def _order_cells(spark: SparkSession, sf_dir: str) -> list[tuple]:
             .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
             .collect()
         ]
-        _CELLS_CACHE[key] = cells
-    return cells
+
+    return shared(spark, sf_dir, "order_cells", build)
 
 
 @query(

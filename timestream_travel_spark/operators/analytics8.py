@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from timestream_travel_spark.cache import shared
 from timestream_travel_spark.registry import query
 from timestream_travel_spark.tables import load_table
 
@@ -48,31 +49,17 @@ _DAILY_SQL = """
 
 # r15: the (t, day, v) daily table is the spine of the whole
 # daily-series test family (Ljung–Box, Dickey–Fuller, Friedman,
-# Kruskal–Wallis, Page, Quade, … — 26 call sites across 9 modules),
-# and each query's plan branches re-ran the events scan + reduce
-# once per branch. Materialized once per (session, fixture) — the
-# analytics5._counts / clusterqual3._family_cached precedent: the
-# first consumer pays the build inside its own timed region; the
-# persisted table is |types|×|days| rows of exact DECIMAL sums
+# Kruskal–Wallis, Page, Quade, … and the timeseries15/26/27 daily
+# series); |types|×|days| rows of exact DECIMAL sums
 # (order-independent, so persisting cannot change any value).
-_DAILY_CACHE: dict = {}
-
-
 def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _DAILY_CACHE.get(key)
-    if df is None:
+    def build():
         ev = load_table(spark, sf_dir, "events")
-        df = (
-            ev.groupBy(
-                F.col("event_type").alias("t"), F.date_trunc("day", "ts").alias("day")
-            )
-            .agg(F.sum(F.col("value").cast("decimal(20,4)")).alias("v"))
-            .persist()
-        )
-        df.count()  # materialize once, eagerly
-        _DAILY_CACHE[key] = df
-    return df
+        return ev.groupBy(
+            F.col("event_type").alias("t"), F.date_trunc("day", "ts").alias("day")
+        ).agg(F.sum(F.col("value").cast("decimal(20,4)")).alias("v"))
+
+    return shared(spark, sf_dir, "daily", build)
 
 
 def _chain_add(terms: list[Column]) -> Column:

@@ -23,14 +23,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from timestream_travel_spark.operators.analytics5 import _CNT_SQL, _counts
-from timestream_travel_spark.operators.analytics8 import (
-    EVENT_TYPES,
-    _DAILY_SQL,
-    _daily,
-)
+from timestream_travel_spark.operators.analytics5 import _CNT_SQL
+from timestream_travel_spark.operators.analytics8 import _DAILY_SQL, EVENT_TYPES
 from timestream_travel_spark.registry import query
 from timestream_travel_spark.tables import load_table
 
@@ -42,17 +37,6 @@ _J_SQL = (
     + " ".join(f"WHEN '{t}' THEN {i + 1}" for i, t in enumerate(EVENT_TYPES))
     + " END"
 )
-
-
-def _j_col():
-    expr = None
-    for i, t in enumerate(EVENT_TYPES):
-        expr = (
-            F.when(F.col("t") == t, i + 1)
-            if expr is None
-            else expr.when(F.col("t") == t, i + 1)
-        )
-    return expr
 
 
 @query(

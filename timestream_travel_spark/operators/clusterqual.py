@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from timestream_travel_spark.cache import shared
 from timestream_travel_spark.functions.vectors import to_double_array
 from timestream_travel_spark.registry import query
 from timestream_travel_spark.tables import load_table, spread
@@ -79,38 +80,24 @@ WITH x AS (
 # r15: the (label, pos, s, q2, n) per-dimension sufficient-statistic
 # table is the shared prefix of q_davies_bouldin AND q_dunn_index,
 # and within each query it feeds THREE plan branches (the scatter
-# reduce and both sides of the separation self-join) — the corpus
-# posexplode ran 3× per query, 6× across the pair. Bounded
-# (|labels|×dims rows) and exact DECIMAL, so persisting once per
-# (session, fixture) cannot change a value; the first consumer pays
-# the build in its own timed region (the analytics5._counts
-# precedent).
-_PER_CACHE: dict = {}
-
-
+# reduce and both sides of the separation self-join). Bounded
+# (|labels|×dims rows) and exact DECIMAL, so persisting cannot change
+# a value.
 def _per_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PER_CACHE.get(key)
-    if cached is not None:
-        return cached
-    e = load_table(spark, sf_dir, "embeddings")
-    # spread before the explode (size-gated; see silhouette)
-    x = spread(e).select(
-        "label",
-        F.posexplode(to_double_array(F.col("embedding"))).alias("pos0", "v"),
-    ).select("label", (F.col("pos0") + 1).cast("int").alias("pos"), "v")
-    df = (
-        x.groupBy("label", "pos")
-        .agg(
+    def build():
+        e = load_table(spark, sf_dir, "embeddings")
+        # spread before the explode (size-gated; see silhouette)
+        x = spread(e).select(
+            "label",
+            F.posexplode(to_double_array(F.col("embedding"))).alias("pos0", "v"),
+        ).select("label", (F.col("pos0") + 1).cast("int").alias("pos"), "v")
+        return x.groupBy("label", "pos").agg(
             F.sum(F.col("v").cast("decimal(14,9)")).alias("s"),
             F.sum((F.col("v") * F.col("v")).cast("decimal(20,12)")).alias("q2"),
             F.count("*").alias("n"),
         )
-        .persist()
-    )
-    df.count()  # materialize once, eagerly
-    _PER_CACHE[key] = df
-    return df
+
+    return shared(spark, sf_dir, "per_dim_stats", build)
 
 
 def _cluster_stats(spark: SparkSession, sf_dir: str):

@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from timestream_travel_spark.cache import shared
 from timestream_travel_spark.operators.clusterqual3 import (
     _D2_SQL,
     CORE_K,
@@ -216,9 +217,7 @@ def mst_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     once per (session, fixture) — the Borůvka loop is the family's
     most job-heavy stage and both the MST query and the flat
     clustering consume its output."""
-    from timestream_travel_spark.operators.clusterqual3 import _family_cached
-
-    return _family_cached(
+    return shared(
         spark, sf_dir, "hdbscan_mst", lambda: hdbscan_mst_edges(spark, sf_dir)
     )
 

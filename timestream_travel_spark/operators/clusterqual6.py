@@ -59,12 +59,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from timestream_travel_spark.cache import shared
 from timestream_travel_spark.functions.vectors import to_double_array
 from timestream_travel_spark.operators.clusterqual3 import (
     DBSCAN_EPS2,
     DBSCAN_MINPTS,
     _census,
-    _family_cached,
     _sqdist,
     clusters_from_pairs,
 )
@@ -180,10 +180,10 @@ def ring_eps_pairs(spark: SparkSession, emb: DataFrame) -> DataFrame:
 
 
 def ring_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-persisted unblocked ε-pair table (va, vb, dd) — joins
-    the clusterqual3 family cache so ring census + ring clusters pay
-    the distance join once per (session, fixture)."""
-    return _family_cached(
+    """Session-persisted unblocked ε-pair table (va, vb, dd): ring
+    census + ring clusters pay the distance join once per (session,
+    fixture)."""
+    return shared(
         spark,
         sf_dir,
         "ring_pairs",

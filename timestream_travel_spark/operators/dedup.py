@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from timestream_travel_spark.cache import shared
 from timestream_travel_spark.ops import let_
 from timestream_travel_spark.registry import query
 from timestream_travel_spark.tables import load_table
@@ -287,28 +288,18 @@ def lsh_verified_pairs(
     )
 
 
-_VERIFIED_PAIRS_CACHE: dict = {}
-
-
 def lsh_verified_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached canonical verified pair list (documents table,
+    """Session-shared canonical verified pair list (documents table,
     threshold 0.5) — the shared INPUT of the near-dup cluster family
     (q_dedup_clusters, q_dedup_keep_best, q_dedup_representatives,
     q_cluster_medoid, q_editdist_neardups), each of which re-ran the
-    whole signature → candidates → exact-verify pipeline (r16; the
-    retrieval.bm25_scores_cached precedent — ≥2 consumers, first
-    consumer pays the build in its timed region, and the family
-    flagship q_lsh_verified_jaccard keeps its uncached from-scratch
-    plan)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _VERIFIED_PAIRS_CACHE.get(key)
-    if df is None:
-        from timestream_travel_spark.tables import load_table
+    whole signature → candidates → exact-verify pipeline (r16). The
+    family flagship q_lsh_verified_jaccard keeps its uncached
+    from-scratch plan."""
+    def build():
+        return lsh_verified_pairs(load_table(spark, sf_dir, "documents"), threshold=0.5)
 
-        d = load_table(spark, sf_dir, "documents")
-        df = lsh_verified_pairs(d, threshold=0.5).localCheckpoint(eager=True)
-        _VERIFIED_PAIRS_CACHE[key] = df
-    return df
+    return shared(spark, sf_dir, "lsh_verified_pairs", build)
 
 
 @query(

@@ -56,7 +56,7 @@ def q_community_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, the intra flag, and the fraction of all edges — Newman's
     e_ij table; Σ_diagonal(edge_frac) is exactly q_lpa_modularity's
     intra_edges/m term."""
-    e = top_trade_edges(spark, sf_dir).persist()
+    e = top_trade_edges(spark, sf_dir)
     lab = _lpa_labels(spark, sf_dir)
     la = lab.select(F.col("node").alias("a"), F.col("lab").alias("lab_a"))
     lb = lab.select(F.col("node").alias("b"), F.col("lab").alias("lab_b"))

@@ -68,10 +68,6 @@ def _degrees_of(e: DataFrame) -> DataFrame:
     return nodes.groupBy("n").agg(F.count(F.lit(1)).alias("d"))
 
 
-def _degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _degrees_of(top_trade_edges(spark, sf_dir))
-
-
 @query(
     "q_rich_club",
     oracle=f"""
@@ -102,7 +98,7 @@ def q_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     connect AMONG THEMSELVES — φ near 1 means the hubs form a club.
     Degrees and the member-edge census are exact integers on the
     bounded backbone; one division per threshold."""
-    e = top_trade_edges(spark, sf_dir).persist()
+    e = top_trade_edges(spark, sf_dir)
     deg = _degrees_of(e)
     ks = spark.createDataFrame([(k,) for k in RC_KS], "k int")
     rich = ks.join(deg, deg.d > ks.k).select("k", "n")
@@ -163,7 +159,7 @@ def q_avg_neighbor_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     full curve behind q_degree_assortativity's single Pearson number.
     The degree-weighted form keeps everything integer until one final
     division per degree class."""
-    e = top_trade_edges(spark, sf_dir).persist()
+    e = top_trade_edges(spark, sf_dir)
     deg = _degrees_of(e)
     adj = e.select(F.col("a").alias("n"), F.col("b").alias("nb")).unionAll(
         e.select(F.col("b").alias("n"), F.col("a").alias("nb"))

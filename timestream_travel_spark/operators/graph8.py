@@ -215,7 +215,7 @@ def q_louvain_one_level_distributed(spark: SparkSession, sf_dir: str) -> DataFra
     """Pre-r15 distributed sweep — the documented unbounded-graph
     path (Pregel-shaped joins); parity with the driver-side query is
     pinned in test_r15_optimization."""
-    e = top_trade_edges(spark, sf_dir).persist()
+    e = top_trade_edges(spark, sf_dir)
     # localCheckpoint, not persist: the gain/census/modularity stages
     # reference the label table 5+ times, and each reference embeds
     # the 4-round LPA lineage into the plan — truncating it here cut

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from timestream_travel_spark.cache import shared
 from timestream_travel_spark.registry import query
 from timestream_travel_spark.tables import load_table
 
@@ -84,33 +85,14 @@ LIMIT {TOP_K}
 # r15 (guide §1.2 step 1 — don't recompute what a dozen plans
 # share): the BM25 score table is the spine of the whole ranking/
 # eval family (RRF fusion, RM3 feedback, MAP/ERR/RBP/F1/bpref/nDCG/
-# PR-curve evals, RBO and Kendall ranker agreement) — before r15
-# every one of those queries re-ran the corpus tokenize + postings
-# aggregation. Materialized once per (session, fixture) — the
-# clusterqual3._family_cached / analytics5._counts precedent: the
-# first consumer pays the build inside its own timed region, later
-# consumers read the persisted postings-pruned table (bounded by
-# docs containing ≥1 query term). q_bm25_topk itself keeps the
-# uncached from-scratch plan as the family's build-cost flagship.
-_RETRIEVAL_CACHE: dict = {}
-
-
-def _session_cached(spark: SparkSession, sf_dir: str, what: str, build) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, what)
-    df = _RETRIEVAL_CACHE.get(key)
-    if df is None:
-        df = build().persist()
-        df.count()  # materialize once, eagerly
-        _RETRIEVAL_CACHE[key] = df
-    return df
-
-
+# PR-curve evals, RBO and Kendall ranker agreement). The table is
+# postings-pruned (bounded by docs containing ≥1 query term).
+# q_bm25_topk itself keeps the uncached from-scratch plan as the
+# family's build-cost flagship.
 def bm25_scores_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The persisted (doc_id, score) BM25 table, built once per
     (session, fixture)."""
-    return _session_cached(
-        spark, sf_dir, "bm25_scores", lambda: bm25_scores(spark, sf_dir)
-    )
+    return shared(spark, sf_dir, "bm25_scores", lambda: bm25_scores(spark, sf_dir))
 
 
 def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:

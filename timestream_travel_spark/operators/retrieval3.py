@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from timestream_travel_spark.cache import shared
 from timestream_travel_spark.operators.llm_text4 import STOPWORDS, _SW_SQL
 from timestream_travel_spark.operators.retrieval import (
     _BM25_CTES,
@@ -190,11 +191,7 @@ def ql_scores_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     agreement consumers (retrieval9's RBO, retrieval10's Kendall
     tau). q_ql_dirichlet_topk keeps the uncached from-scratch plan
     as the scorer's build-cost flagship."""
-    from timestream_travel_spark.operators.retrieval import _session_cached
-
-    return _session_cached(
-        spark, sf_dir, "ql_scores", lambda: ql_scores(spark, sf_dir)
-    )
+    return shared(spark, sf_dir, "ql_scores", lambda: ql_scores(spark, sf_dir))
 
 
 def ql_scores(spark: SparkSession, sf_dir: str) -> DataFrame:

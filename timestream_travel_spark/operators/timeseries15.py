@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from timestream_travel_spark.cache import shared
+from timestream_travel_spark.operators.analytics8 import _daily
 from timestream_travel_spark.registry import query
 from timestream_travel_spark.tables import load_table
 
@@ -49,54 +51,33 @@ _DAILY_OHLC_SQL = """
 """
 
 
-def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy(
-        F.col("event_type").alias("t"), F.date_trunc("day", "ts").alias("day")
-    ).agg(F.sum(F.col("value").cast("decimal(20,4)")).alias("v"))
-
-
-# r15: the daily OHLC table is the spine of the entire indicator
-# family (Aroon, ATR/Keltner, ADX/DMI, SAR, Ichimoku, SuperTrend, …
-# — 29 call sites across 13 timeseries modules), and every query
-# re-ran the events scan + two reduces per plan branch. Materialized
-# once per (session, fixture) — the analytics5._counts /
-# clusterqual3._family_cached precedent: the first consumer pays the
-# build inside its own timed region; the persisted table is
-# |types|×|days| rows of exact DECIMAL sums / struct extrema
-# (order-independent, so persisting cannot change any value).
-_OHLC_CACHE: dict = {}
-
-
 def _daily_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily open/high/low/close of the hourly DECIMAL level series.
+    """Daily open/high/low/close of the hourly DECIMAL level series,
+    shared per (session, fixture): the spine of the whole indicator
+    family (Aroon, ATR/Keltner, ADX/DMI, SAR, Ichimoku, SuperTrend, …);
+    |types|×|days| rows of exact DECIMAL sums / struct extrema
+    (order-independent, so persisting cannot change any value).
 
     Open/close use lexicographic struct extrema on (hour, value) —
     the first/last hour's level with a deterministic policy shared by
     both engines (hours within a day are unique, so there is no tie)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _OHLC_CACHE.get(key)
-    if cached is not None:
-        return cached
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        F.col("event_type").alias("t"),
-        F.date_trunc("day", "ts").alias("day"),
-        F.date_trunc("hour", "ts").alias("hr"),
-    ).agg(F.sum(F.col("value").cast("decimal(20,4)")).alias("hv"))
-    df = hourly.groupBy("t", "day").agg(
-        F.max("hv").alias("hi"),
-        F.min("hv").alias("lo"),
-        F.max(F.struct(F.col("hr").alias("h"), F.col("hv").alias("v")))["v"].alias(
-            "cl"
-        ),
-        F.min(F.struct(F.col("hr").alias("h"), F.col("hv").alias("v")))["v"].alias(
-            "op"
-        ),
-    ).persist()
-    df.count()  # materialize once, eagerly
-    _OHLC_CACHE[key] = df
-    return df
+
+    def build():
+        ev = load_table(spark, sf_dir, "events")
+        hourly = ev.groupBy(
+            F.col("event_type").alias("t"),
+            F.date_trunc("day", "ts").alias("day"),
+            F.date_trunc("hour", "ts").alias("hr"),
+        ).agg(F.sum(F.col("value").cast("decimal(20,4)")).alias("hv"))
+        hv = F.struct(F.col("hr").alias("h"), F.col("hv").alias("v"))
+        return hourly.groupBy("t", "day").agg(
+            F.max("hv").alias("hi"),
+            F.min("hv").alias("lo"),
+            F.max(hv)["v"].alias("cl"),
+            F.min(hv)["v"].alias("op"),
+        )
+
+    return shared(spark, sf_dir, "daily_ohlc", build)
 
 
 @query(

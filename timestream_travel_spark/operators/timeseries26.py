@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from timestream_travel_spark.operators.analytics8 import _daily
 from timestream_travel_spark.registry import query
 from timestream_travel_spark.tables import load_table
 
@@ -56,11 +57,10 @@ _DAILY_DEC_SQL = """
 
 
 def _daily_dec(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy(
-        F.col("event_type").alias("t"),
-        F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-    ).agg(F.sum(F.col("value").cast("decimal(20,4)")).alias("v"))
+    """The shared analytics8._daily spine with `day` as 'yyyy-MM-dd'."""
+    return _daily(spark, sf_dir).select(
+        "t", F.date_format("day", "yyyy-MM-dd").alias("day"), "v"
+    )
 
 
 # ------------------------------------------------------------- KAMA

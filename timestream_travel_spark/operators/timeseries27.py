@@ -27,8 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from timestream_travel_spark.operators.timeseries26 import _daily_dec as _daily27
 from timestream_travel_spark.registry import query
-from timestream_travel_spark.tables import load_table
 
 DT_A = 0.25  # EMA gain (N=7) — binary-exact, same as TRIX
 CAL_ANN = 252  # annualization factor (trading-day convention)
@@ -39,14 +39,6 @@ _DAILY_SQL27 = """
              SUM(CAST(value AS DECIMAL(20,4))) AS v
       FROM events GROUP BY 1, 2
 """
-
-
-def _daily27(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy(
-        F.col("event_type").alias("t"),
-        F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-    ).agg(F.sum(F.col("value").cast("decimal(20,4)")).alias("v"))
 
 
 # -------------------------------------------------------- DEMA/TEMA
